@@ -213,10 +213,17 @@ def cross_modal_pairs(docs: DataFrame, images: DataFrame,
             max_hamming=max_hamming, max_bucket=max_bucket)
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        tp_f = pool.submit(inheritable_thread_target(_text_pairs))
-        ip_f = pool.submit(inheritable_thread_target(_image_pairs))
-        tp = tp_f.result()
-        ip = ip_f.result()
+        futs = [pool.submit(inheritable_thread_target(f))
+                for f in (_text_pairs, _image_pairs)]
+    # leaving the pool waited for BOTH builders: if one raised, release
+    # the persisted pair table the other returned before re-raising
+    failed = [f.exception() for f in futs if f.exception() is not None]
+    if failed:
+        for f in futs:
+            if f.exception() is None:
+                f.result().unpersist()
+        raise failed[0]
+    tp, ip = (f.result() for f in futs)
     out = (tp.select("id_a", "id_b", F.lit("text").alias("source"))
              .unionByName(
                  ip.select("id_a", "id_b", F.lit("phash").alias("source")))

@@ -5,9 +5,8 @@ Four tiers, all shuffle-conscious:
 - ``exact_dedup``       content-hash groupBy (one shuffle on a 16-byte key)
 - ``minhash_lsh``       shingle -> minhash -> band -> bucket-join; candidate
                         pairs only form inside LSH buckets, never all-pairs.
-                        Entirely JVM-side: shingling via ``sequence`` +
-                        ``substring`` higher-order functions, hashing via
-                        ``xxhash64`` — no Python in the pipeline.
+                        Signatures come from a vectorized NumPy kernel over
+                        Arrow batches (``minhash_signatures_np``).
 - ``simhash``           64-bit sign-of-weighted-votes fingerprint (Arrow
                         batch UDF), near-dups = Hamming distance <= t via
                         bucket join on rotated prefixes.
@@ -18,6 +17,8 @@ well-distributed keys; pair verification joins stay within buckets.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -49,61 +50,8 @@ def shingles(text_col: str, k: int = 5) -> F.Column:
     return F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(k)))
 
 
-# SplitMix64 constants (public mix function) as signed-long literals
-_SM_GAMMA = -7046029254386353131    # 0x9E3779B97F4A7C15
-_SM_M1 = -4658895280553007687       # 0xBF58476D1CE4E5B9
-_SM_M2 = -7723592293110705685       # 0x94D049BB133111EB
-
-
-def _sm_mix(z):
-    """SplitMix64 finalizer as wrapping long column math (ANSI off)."""
-    z = z.bitwiseXOR(F.shiftrightunsigned(z, 30)) * F.lit(_SM_M1)
-    z = z.bitwiseXOR(F.shiftrightunsigned(z, 27)) * F.lit(_SM_M2)
-    return z.bitwiseXOR(F.shiftrightunsigned(z, 31))
-
-
-def shingle_hashes(shingle_col):
-    """One xxhash64 pass over the shingles — the only string hashing."""
-    return F.transform(shingle_col, lambda sh: F.xxhash64(sh))
-
-
-def _km_signature(hashes_col, n_hashes: int):
-    """Length-``n_hashes`` minhash signature from a base-hash array via
-    Kirsch–Mitzenmacher double hashing: variant i of element hash h is
-    ``h1 + i * h2`` with ``h1 = h`` and ``h2 = splitmix(h) | 1`` (odd, so
-    every variant family is a full-period permutation of Z_2^64).
-
-    WHY KM (round 3): the round-2 family ``mix(h xor salt_i)`` derived all
-    variants from one mix of the same base — measured on sf0.1 documents it
-    left the per-slot argmins CORRELATED across salts, inflating est_jaccard
-    for non-dup pairs: 2831 candidate pairs of which only 256 were true
-    (precision 0.09).  KM double hashing, same cost, emits 299 with the
-    SAME 256 true pairs (precision 0.86).  See BENCH/IMPROVEMENTS.md.
-
-    Formulation: a single ``aggregate`` whose accumulator is the length-n
-    running-minimum array, merged per element via ``zip_with(least)`` over
-    a literal index array — one plan node, the hash array traversed once
-    (the n-transforms form took ~13 s of analysis/codegen in round 2)."""
-    idx = F.array(*[F.lit(i).cast("long") for i in range(n_hashes)])
-    init = F.array_repeat(F.lit(2 ** 63 - 1), n_hashes)
-    pairs = F.transform(hashes_col, lambda h: F.struct(
-        h.alias("h1"), _sm_mix(h).bitwiseOR(F.lit(1)).alias("h2")))
-    return F.aggregate(
-        pairs, init,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(idx, lambda i: s["h1"] + i * s["h2"]),
-            lambda a, b: F.least(a, b)))
-
-
-def minhash_signature(shingle_col, n_hashes: int = 32):
-    """Array of ``n_hashes`` min-hash values in ONE pass over the hashes
-    (xxhash64 base + KM double hashing — see ``_km_signature``)."""
-    return _km_signature(shingle_hashes(shingle_col), n_hashes)
-
-
 def _sm_mix_np(z: np.ndarray) -> np.ndarray:
-    """SplitMix64 finalizer on uint64 arrays (twin of ``_sm_mix``)."""
+    """SplitMix64 finalizer on uint64 arrays."""
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
@@ -123,12 +71,6 @@ def _widened_id_type(simple: str, id_col: str, strict: bool = True) -> str:
     raise ValueError(
         f"id column {id_col!r} must be integral or string for the "
         f"signature store, got {simple}")
-
-
-def _widened_id_col(df: DataFrame, id_col: str) -> F.Column:
-    """``_id`` select expression at the store-stable widened type."""
-    t = _widened_id_type(df.schema[id_col].dataType.simpleString(), id_col)
-    return F.col(id_col).cast(t).alias("_id")
 
 
 def _check_store_id_type(spark, path: str, new_sig: DataFrame) -> None:
@@ -153,14 +95,16 @@ def minhash_signatures_np(docs: DataFrame, text_col: str = "text",
                           n_hashes: int = 32) -> DataFrame:
     """(_id, sig array<long>) via a NumPy mapInPandas kernel: sliding-window
     FNV-1a over the lowercased UTF-8 bytes + Kirsch–Mitzenmacher double
-    hashing (``h1 + i * h2``, ``h2 = splitmix(h1) | 1`` — see
-    ``_km_signature`` for why KM replaced the xor-salt family in round 3).
+    hashing: variant i of window hash h1 is ``h1 + i * h2`` with
+    ``h2 = splitmix(h1) | 1`` (odd, so every variant family is a
+    full-period permutation of Z_2^64).
 
-    The A/B alternative to the interpreted-HOF pipeline (VERDICT r2 item 8
-    — see BENCH/IMPROVEMENTS.md).  Same KM family downstream; the BASE hash
-    differs (FNV-1a on byte windows vs JVM xxhash64 on char shingles), so
-    signatures are engine-specific — pairs/estimates are statistically
-    equivalent, not byte-equal.
+    WHY KM (round 3): the round-2 family ``mix(h xor salt_i)`` derived all
+    variants from one mix of the same base — measured on sf0.1 documents it
+    left the per-slot argmins CORRELATED across salts, inflating est_jaccard
+    for non-dup pairs: 2831 candidate pairs of which only 256 were true
+    (precision 0.09).  KM double hashing, same cost, emits 299 with the
+    SAME 256 true pairs (precision 0.86).  See BENCH/IMPROVEMENTS.md.
 
     ``_id`` follows the input id type — STRING ids carry the namespaced
     ``doc:``/``img:`` nodes of ``cross_modal_pairs``; every INTEGRAL
@@ -247,7 +191,7 @@ def _km_sig_doc(text, k: int = 5, n_hashes: int = 32) -> np.ndarray:
 def minhash_lsh(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                 k: int = 5, n_hashes: int = 32, bands: int = 8,
                 jaccard_threshold: float = 0.6,
-                max_bucket: int = 200, engine: str = "numpy") -> DataFrame:
+                max_bucket: int = 200) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, est_jaccard) via banded MinHash.
 
     rows_per_band = n_hashes/bands; a pair collides if any band's slice of
@@ -259,40 +203,18 @@ def minhash_lsh(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     boilerplate shared by thousands of docs and would blow up the join
     quadratically; its members still pair through their other bands).
 
-    ``engine``: ``"numpy"`` (default) = Arrow mapInPandas signatures
-    (``minhash_signatures_np``) — measured 2-3x faster than the interpreted
-    HOF pipeline at sf0.1 (BENCH/IMPROVEMENTS.md); ``"hof"`` = JVM
-    higher-order-function signatures (no Python workers needed).  Both use
-    KM double hashing; pairs are statistically equivalent, not byte-equal."""
-    r = n_hashes // bands
+    Signatures come from the Arrow/NumPy kernel ``minhash_signatures_np``
+    (measured faster than an interpreted JVM higher-order-function
+    pipeline at sf0.1, BENCH/BASELINE.md)."""
     # Small inputs arrive as ONE parquet split, which would serialize the
-    # (interpreted, expensive) shingle-hash projection on a single core —
-    # spread the rows first.  At scale inputs already have many splits and
-    # this is a no-op.
+    # signature kernel on a single core — spread the rows first.  At scale
+    # inputs already have many splits and this is a no-op.
     par = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
-    if engine == "numpy":
-        sig = minhash_signatures_np(docs, text_col, id_col, k, n_hashes)
-        return minhash_pairs_from_sig(sig, n_hashes, bands,
-                                      jaccard_threshold, max_bucket)
-    # Two-step materialization, both load-bearing:
-    # 1. the base shingle-hash array is persisted so the (interpreted,
-    #    expensive) string-hash pass runs ONCE — Catalyst's CollapseProject
-    #    would otherwise inline it into all n_hashes salted variants;
-    # 2. the signature table is persisted (inside minhash_pairs_from_sig)
-    #    before the self-join — signatures recomputed per join side are
-    #    wasteful AND self-joins of renamed un-materialized projections
-    #    have bitten us before (see git log).
-    hashed = docs.select(
-        F.col(id_col).alias("_id"),
-        shingle_hashes(shingles(text_col, k)).alias("_h")).persist()
-    sig = hashed.select(
-        "_id", _km_signature(F.col("_h"), n_hashes).alias("sig"))
-    out = minhash_pairs_from_sig(sig, n_hashes, bands, jaccard_threshold,
-                                 max_bucket)
-    hashed.unpersist()
-    return out
+    sig = minhash_signatures_np(docs, text_col, id_col, k, n_hashes)
+    return minhash_pairs_from_sig(sig, n_hashes, bands, jaccard_threshold,
+                                  max_bucket)
 
 
 def band_table(sig: DataFrame, n_hashes: int = 32,
@@ -310,6 +232,66 @@ def band_table(sig: DataFrame, n_hashes: int = 32,
                          for j in range(r)])).alias("band_hash"))
             for b in range(bands)])).alias("band")
     ).select("_id", "band.band_id", "band.band_hash")
+
+
+_BAND_KEY = ["band_id", "band_hash"]     # minhash LSH bucket
+_BLOCK_KEY = ["block_id", "block_val"]   # simhash/phash pigeonhole bucket
+
+
+def _drop_hot(rows: DataFrame, key: list, max_bucket: int | None,
+              distinct_ids: bool = False) -> DataFrame:
+    """Rows of buckets with at most ``max_bucket`` members — the skew
+    guard of every bucket join (an over-full bucket means boilerplate
+    shared by thousands of rows and would blow the join up quadratically;
+    its members still pair through their other buckets).  The hot list
+    comes from an aggregate + broadcast anti-join: the probe rows never
+    shuffle (a window count would re-shuffle them all on the bucket key
+    just to count), and the hot list is tiny by definition.
+    ``distinct_ids`` counts distinct ``_id`` members instead of rows."""
+    if max_bucket is None:
+        return rows
+    n, name = ((F.countDistinct("_id"), "n") if distinct_ids
+               else (F.count(F.lit(1)), "count"))
+    hot = (rows.groupBy(*key).agg(n.alias(name))
+               .where(F.col(name) > max_bucket)
+               .select(*key))
+    return rows.join(F.broadcast(hot), key, "left_anti")
+
+
+def _bucket_join(a: DataFrame, b: DataFrame, key: list, on_ids=None,
+                 extra=(), keep=None) -> DataFrame:
+    """Candidate pairs of two bucket tables: rows sharing a bucket ``key``
+    (and ``on_ids``) become (id_a from ``a``, id_b from ``b``, *extra),
+    filtered by ``keep`` and deduplicated — a pair may share several
+    buckets.  The sides are aliased ``a``/``b`` and every column is
+    qualified.  NOTE: renaming columns of the SAME plan and joining (the
+    naive self-join) hits Spark's ambiguous-attribute resolution — both
+    sides can silently bind to one, NONDETERMINISTICALLY."""
+    cond = ((F.col(f"a.{key[0]}") == F.col(f"b.{key[0]}"))
+            & (F.col(f"a.{key[1]}") == F.col(f"b.{key[1]}")))
+    if on_ids is not None:
+        cond = cond & on_ids
+    pairs = (a.alias("a").join(b.alias("b"), cond)
+              .select(F.col("a._id").alias("id_a"),
+                      F.col("b._id").alias("id_b"), *extra))
+    if keep is not None:
+        pairs = pairs.where(keep)
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
+def _hamming() -> F.Column:
+    """Hamming distance of the 64-bit hashes of a ``_bucket_join`` pair."""
+    return F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))) \
+        .alias("hamming")
+
+
+def _est_jaccard(sig_a: F.Column, sig_b: F.Column, n_hashes: int) -> F.Column:
+    """Fraction of matching minhash slots.  A/B-measured (round 8): this
+    zip_with/filter form beats a flat 32-term element_at comparison sum
+    (1.9 s vs 2.5 s at 600k candidate pairs) — keep the higher-order form."""
+    return (F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y),
+                            lambda m: m)).cast("double")
+            / F.lit(float(n_hashes)))
 
 
 def minhash_pairs_from_sig(sig: DataFrame, n_hashes: int = 32,
@@ -330,9 +312,6 @@ def minhash_pairs_from_sig(sig: DataFrame, n_hashes: int = 32,
         sig = sig.persist()
 
     bands_df = band_table(sig, n_hashes, bands).persist()
-    bands_cached = bands_df   # keep the persisted handle (bands_df is
-    #                           reassigned by the skew filter below)
-
     # force materialization NOW: a lazily-persisted self-join input is
     # still re-resolved per side at analysis time (observed nondeterminism
     # persists until the cache actually exists before the join is planned).
@@ -341,41 +320,14 @@ def minhash_pairs_from_sig(sig: DataFrame, n_hashes: int = 32,
     # was measured at ~0.4 s of pure latency per call, round 8)
     bands_df.count()
 
-    if max_bucket is not None:
-        # hot-bucket EXCLUSION list via aggregate + broadcast anti-join: the
-        # probe rows never shuffle (a window count would re-shuffle them all
-        # on the bucket key just to count); the hot list is tiny by definition
-        hot = (bands_df.groupBy("band_id", "band_hash").count()
-                       .where(F.col("count") > max_bucket)
-                       .select("band_id", "band_hash"))
-        bands_df = bands_df.join(F.broadcast(hot),
-                                 ["band_id", "band_hash"], "left_anti")
-
-    # Self-join via explicit aliases + qualified columns.  NOTE: renaming
-    # columns of the SAME plan and joining (the naive self-join) hits
-    # Spark's ambiguous-attribute resolution — both `sig_a` and `sig_b`
-    # can silently bind to one side, corrupting the estimator
-    # NONDETERMINISTICALLY.  Qualified aliases below are the supported
-    # pattern; ids travel through the bucket join, signatures re-attach by
-    # id afterwards.
-    ba, bb = bands_df.alias("ba"), bands_df.alias("bb")
-    pairs = (ba.join(bb,
-                     (F.col("ba.band_id") == F.col("bb.band_id"))
-                     & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-                     & (F.col("ba._id") < F.col("bb._id")))
-               .select(F.col("ba._id").alias("id_a"),
-                       F.col("bb._id").alias("id_b"))
-               .dropDuplicates(["id_a", "id_b"]))
+    # ids travel through the bucket join, signatures re-attach by id after
+    kept = _drop_hot(bands_df, _BAND_KEY, max_bucket)
+    pairs = _bucket_join(kept, kept, _BAND_KEY, F.col("a._id") < F.col("b._id"))
     sa = sig.select(F.col("_id").alias("id_a"), F.col("sig").alias("sig_a")).alias("sa")
     sb = sig.select(F.col("_id").alias("id_b"), F.col("sig").alias("sig_b")).alias("sb")
     pairs = pairs.join(sa, "id_a").join(sb, "id_b")
-    # A/B-measured (round 8): this zip_with/filter form beats a flat
-    # 32-term element_at comparison sum (1.9 s vs 2.5 s at 600k candidate
-    # pairs) — keep the higher-order form.
-    est = (F.size(F.filter(F.zip_with(F.col("sa.sig_a"), F.col("sb.sig_b"),
-                                      lambda x, y: x == y),
-                           lambda m: m)).cast("double") / F.lit(float(n_hashes)))
-    pairs = pairs.withColumn("est_jaccard", est)
+    pairs = pairs.withColumn("est_jaccard", _est_jaccard(
+        F.col("sa.sig_a"), F.col("sb.sig_b"), n_hashes))
     out = (pairs.where(F.col("est_jaccard") >= jaccard_threshold)
                 .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
                 .persist())
@@ -386,7 +338,7 @@ def minhash_pairs_from_sig(sig: DataFrame, n_hashes: int = 32,
     out.count()
     if sig_owned:
         sig.unpersist()
-    bands_cached.unpersist()
+    bands_df.unpersist()
     return out
 
 
@@ -534,29 +486,10 @@ def simhash_pairs_from_sig(sig: DataFrame, max_hamming: int = 3,
     # the pre-self-join fence (two redundant jobs removed, round 8)
     blocks = pigeonhole_block_table(sig, max_hamming).persist()
     blocks.count()  # materialize before the self-join (see minhash_lsh)
-
-    if max_bucket is not None:
-        # broadcast anti-join exclusion (see minhash_lsh): probe rows stay put
-        hot = (blocks.groupBy("block_id", "block_val").count()
-                     .where(F.col("count") > max_bucket)
-                     .select("block_id", "block_val"))
-        blocks_f = blocks.join(F.broadcast(hot),
-                               ["block_id", "block_val"], "left_anti")
-    else:
-        blocks_f = blocks
-
-    ba, bb = blocks_f.alias("ba"), blocks_f.alias("bb")
-    pairs = (ba.join(bb,
-                     (F.col("ba.block_id") == F.col("bb.block_id"))
-                     & (F.col("ba.block_val") == F.col("bb.block_val"))
-                     & (F.col("ba._id") < F.col("bb._id")))
-               .select(F.col("ba._id").alias("id_a"),
-                       F.col("bb._id").alias("id_b"),
-                       F.bit_count(F.col("ba.simhash")
-                                   .bitwiseXOR(F.col("bb.simhash"))).alias("hamming"))
-               .where(F.col("hamming") <= max_hamming)
-               .dropDuplicates(["id_a", "id_b"]))
-    out = pairs.persist()
+    kept = _drop_hot(blocks, _BLOCK_KEY, max_bucket)
+    out = _bucket_join(kept, kept, _BLOCK_KEY,
+                       F.col("a._id") < F.col("b._id"), [_hamming()],
+                       F.col("hamming") <= max_hamming).persist()
     out.count()   # materialize the (small) result, release intermediates
     blocks.unpersist()
     return out
@@ -607,127 +540,93 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame,
 # streaming-ingest analog of similarity.append_to_index: a training-data
 # pipeline appends documents daily and must reject near-dups of the
 # RESIDENT corpus without recomputing anything over it)
+#
+# Both stores — minhash text signatures and phash image signatures — are
+# one layout and one mechanism: ``{path}/sigs`` (_id + signature), a
+# DERIVED bucket table always regenerable from sigs with the params
+# sidecar (``bands`` / ``blocks``), and ``{path}/params``.  The core below
+# is written once; a ``_StoreKind`` says what the two stores differ in.
 # ---------------------------------------------------------------------------
 
-def build_minhash_store(docs: DataFrame, path: str, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = 5,
-                        n_hashes: int = 32, bands: int = 8) -> None:
-    """Persist the corpus's minhash state: ``sigs`` (_id, sig) and the
-    LSH ``bands`` table, plus a params sidecar.  One full pass at build;
-    every :func:`incremental_minhash_pairs` batch afterwards touches the
-    store only as (a) one SCAN of ``bands`` probed by a BROADCAST of the
-    new batch's bands (the resident rows never shuffle), and (b) a
-    semi-joined read of ``sigs`` bounded by the candidate count."""
-    import pandas as pd
-    # store boundary: enforce the canonical integral-or-string id class
-    _widened_id_type(docs.schema[id_col].dataType.simpleString(), id_col)
-    sig = minhash_signatures_np(docs, text_col, id_col, k, n_hashes)
+class _StoreKind(NamedTuple):
+    name: str           # compact_store's ``store`` report value
+    derived: str        # derived bucket table directory under the root
+    key: list           # its (bucket id, bucket value) columns
+    derive: Callable    # (sig, cfg) -> derived rows of a signature table
+    rows_per_sig: Callable   # cfg -> derived rows per signature
+    cross: Callable     # (spark, sigs dir, stored rows, batch rows,
+    #                       new_sig, cfg, small_batch) -> cross pairs
+    intra: Callable     # (new_sig, cfg) -> in-batch pairs
+
+
+def _store_params(spark, path: str) -> dict:
+    return {k: int(v) for k, v in
+            spark.read.parquet(f"{path}/params").collect()[0]
+                 .asDict().items()}
+
+
+def _build_store(sig: DataFrame, path: str, kind: _StoreKind,
+                 params: dict) -> None:
+    """Write ``sigs``, the derived table (from the WRITTEN sigs, so the
+    two always agree) and the params sidecar."""
+    spark = sig.sparkSession
     sig.write.mode("overwrite").parquet(f"{path}/sigs")
-    spark = docs.sparkSession
-    stored_sig = spark.read.parquet(f"{path}/sigs")
-    band_table(stored_sig, n_hashes, bands) \
-        .write.mode("overwrite").parquet(f"{path}/bands")
-    spark.createDataFrame(pd.DataFrame({
-        "k": [k], "n_hashes": [n_hashes], "bands": [bands],
-    })).write.mode("overwrite").parquet(f"{path}/params")
+    kind.derive(spark.read.parquet(f"{path}/sigs"), params) \
+        .write.mode("overwrite").parquet(f"{path}/{kind.derived}")
+    spark.createDataFrame(pd.DataFrame({k: [v] for k, v in params.items()})) \
+        .write.mode("overwrite").parquet(f"{path}/params")
 
 
-def incremental_minhash_pairs(spark, path: str, new_docs: DataFrame,
-                              text_col: str = "text",
-                              id_col: str = "doc_id",
-                              jaccard_threshold: float = 0.6,
-                              max_bucket: int = 200,
-                              broadcast_threshold: int = 1_000_000):
+def _store_pairs(spark, path: str, kind: _StoreKind, signatures,
+                 broadcast_threshold: int, **opts):
     """Near-dup pairs of a NEW batch against the persisted store AND
     within the batch itself, touching only O(batch + candidates) of the
-    resident corpus.  Returns ``(pairs, new_sig)``: pairs carry
-    ``id_a``/``id_b``/``est_jaccard`` with id_a from the store side for
-    cross pairs (canonical id_a < id_b within the batch); ``new_sig`` is
-    the batch signature table for :func:`append_to_minhash_store`.
+    resident corpus.  ``signatures(cfg)`` builds the batch signature
+    table from the store params; ``opts`` (``max_bucket`` and the kind's
+    thresholds) join the params in ``cfg``.  Returns ``(pairs, new_sig)``
+    with ``new_sig`` persisted for the append.
 
     Scale shape: the daily batch is small relative to the corpus, so the
-    batch's band table BROADCASTS and the resident ``bands`` table is
-    only SCANNED (no shuffle of resident rows); signature re-attachment
-    reads ``sigs`` through a join keyed by the (bounded) candidate ids.
-
-    ``broadcast_threshold`` (round-6 verdict #3): the daily-trickle
-    broadcast assumption breaks on a large BACKFILL batch — broadcasting
-    millions of band rows OOMs the driver/executors.  Batches whose band
-    table exceeds this row count fall back to a sort-merge join on the
-    band key (hint-pinned so size stats can't flip it back), shuffling
-    both sides but never materializing the batch in every executor."""
+    batch's derived rows BROADCAST and the resident derived table is only
+    SCANNED (no shuffle of resident rows).  Batches past
+    ``broadcast_threshold`` derived rows (a BACKFILL — round-6 verdict #3:
+    broadcasting millions of rows OOMs the driver/executors) fall back to
+    a sort-merge join on the bucket key, hint-pinned so size stats can't
+    flip it back."""
     from .similarity import _live_dir
     # a compaction crashed mid-swap leaves the layout under
     # __compact_old — READ it from there; renaming from this (read-only)
     # path would race an in-flight compaction swap (review r7, third
     # pass).  The next append/compaction performs the actual recovery.
-    spath, bpath = _live_dir(f"{path}/sigs"), _live_dir(f"{path}/bands")
-    p = spark.read.parquet(f"{path}/params").collect()[0]
-    k, n_hashes, bands = int(p["k"]), int(p["n_hashes"]), int(p["bands"])
+    live = (f"{path}/sigs", f"{path}/{kind.derived}")
+    spath, dpath = map(_live_dir, live)
+    cfg = {**_store_params(spark, path), **opts}
 
-    new_sig = minhash_signatures_np(new_docs, text_col, id_col, k,
-                                    n_hashes).persist()
+    new_sig = signatures(cfg).persist()
     # fail BEFORE any pair work or sink delivery: with the id widening
     # relaxed in-session, a mistyped batch id would otherwise surface
-    # only at append time — after incremental_dedup's out_sink already
+    # only at append time — after the admission's out_sink already
     # delivered the batch, leaving a permanent poison pill (review r7,
     # third pass)
     _check_store_id_type(spark, path, new_sig)
-    n_new = new_sig.count()
-    small_batch = n_new * bands <= broadcast_threshold
-    new_bands = band_table(new_sig, n_hashes, bands)
+    small_batch = new_sig.count() * kind.rows_per_sig(cfg) \
+        <= broadcast_threshold
+    new_rows = kind.derive(new_sig, cfg)
 
-    stored_bands = spark.read.parquet(bpath)
-    if max_bucket is not None:
-        # resident hot buckets are a property of the STORE — exclude them
-        # store-side (broadcast list), same guard as minhash_lsh.
-        # countDistinct, not count: a crash-replayed append can leave
-        # DUPLICATE band rows (harmless for pairs, which dedupe), and a
-        # raw row count would let them push a legitimate bucket over the
-        # cap — silently disabling near-dup detection for it
-        hot = (stored_bands.groupBy("band_id", "band_hash")
-                           .agg(F.countDistinct("_id").alias("n"))
-                           .where(F.col("n") > max_bucket)
-                           .select("band_id", "band_hash"))
-        stored_bands = stored_bands.join(F.broadcast(hot),
-                                         ["band_id", "band_hash"],
-                                         "left_anti")
-
-    nb_side = (F.broadcast(new_bands) if small_batch
-               else new_bands.hint("merge"))
-    cross = (stored_bands.alias("sb")
-             .join(nb_side.alias("nb"),
-                   (F.col("sb.band_id") == F.col("nb.band_id"))
-                   & (F.col("sb.band_hash") == F.col("nb.band_hash")))
-             .select(F.col("sb._id").alias("id_a"),
-                     F.col("nb._id").alias("id_b"))
-             .where(F.col("id_a") != F.col("id_b"))
-             .dropDuplicates(["id_a", "id_b"]))
-    stored_sig = spark.read.parquet(spath)
-    sa = stored_sig.select(F.col("_id").alias("id_a"),
-                           F.col("sig").alias("sig_a"))
-    sb = new_sig.select(F.col("_id").alias("id_b"),
-                        F.col("sig").alias("sig_b"))
-    if not small_batch:  # signature re-attachment scales with the batch too
-        sb = sb.hint("merge")
-    est = (F.size(F.filter(F.zip_with("sig_a", "sig_b",
-                                      lambda x, y: x == y),
-                           lambda m: m)).cast("double")
-           / F.lit(float(n_hashes)))
-    sb_side = F.broadcast(sb) if small_batch else sb
-    cross_pairs = (cross.join(sa, "id_a").join(sb_side, "id_b")
-                        .withColumn("est_jaccard", F.round(est, 6))
-                        .where(F.col("est_jaccard") >= jaccard_threshold)
-                        .select("id_a", "id_b", "est_jaccard")
-                        # crash-replay-duplicated sig rows in the store
-                        # re-expand the deduped candidates here — dedupe
-                        # AFTER attachment too (bounded: candidate-sized)
-                        .dropDuplicates(["id_a", "id_b"]))
-
-    intra = minhash_pairs_from_sig(new_sig, n_hashes, bands,
-                                   jaccard_threshold, max_bucket)
-    pairs = cross_pairs.unionByName(intra)
-    if spath != f"{path}/sigs" or bpath != f"{path}/bands":
+    # resident hot buckets are a property of the STORE — exclude them
+    # store-side.  Distinct ids, not rows: a crash-replayed append can
+    # leave DUPLICATE derived rows (harmless for pairs, which dedupe), and
+    # a raw row count would let them push a legitimate bucket over the
+    # cap — silently disabling near-dup detection for it
+    stored = _drop_hot(spark.read.parquet(dpath), kind.key,
+                       cfg["max_bucket"], distinct_ids=True)
+    nb_side = (F.broadcast(new_rows) if small_batch
+               else new_rows.hint("merge"))
+    cross = kind.cross(spark, spath, stored, nb_side, new_sig, cfg,
+                       small_batch)
+    intra = kind.intra(new_sig, cfg)
+    pairs = cross.unionByName(intra)
+    if (spath, dpath) != live:
         # crashed-swap view: checkpoint (not persist) so the pair table
         # survives the writer recovery that the downstream append runs —
         # a persisted plan re-evaluates against the renamed-away path if
@@ -740,32 +639,28 @@ def incremental_minhash_pairs(spark, path: str, new_docs: DataFrame,
     return pairs, new_sig
 
 
-def append_to_minhash_store(spark, path: str, new_sig: DataFrame,
-                            check_id_type: bool = True) -> int:
-    """Append a batch's signatures + bands to the store (call with the
-    ACCEPTED subset after dedup so rejected near-dups never pollute the
-    store).  Returns the number of rows appended.  ``check_id_type=False``
-    skips the resident-schema probe when the caller (the incremental
-    paths) already ran it pre-sink — direct callers keep the chokepoint."""
+def _append_to_store(spark, path: str, new_sig: DataFrame,
+                     kind: _StoreKind, check_id_type: bool) -> int:
+    """Append a batch's signatures + derived rows; returns the row count."""
     from .similarity import _recover_swap
-    # a compaction crashed mid-swap leaves sigs/bands under __compact_old;
-    # appending into a fresh root would orphan the resident store
+    # a compaction crashed mid-swap leaves sigs/derived under
+    # __compact_old; appending into a fresh root would orphan the store
     _recover_swap(f"{path}/sigs")
-    _recover_swap(f"{path}/bands")
+    _recover_swap(f"{path}/{kind.derived}")
     if check_id_type:
         _check_store_id_type(spark, path, new_sig)
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    cfg = _store_params(spark, path)
     # checkpoint: the (semi-join) input evaluates ONCE, not per action.
-    # Write order bands THEN sigs: a crash between the files leaves
-    # duplicate-band rows a replay re-appends harmlessly, whereas
-    # sigs-without-bands would trip the same-id replay guard while
-    # silently losing CONTENT rejection for those docs forever.  (At
+    # Write order derived THEN sigs: a crash between the files leaves
+    # duplicate derived rows a replay re-appends harmlessly, whereas
+    # sigs-without-derived would trip the same-id replay guard while
+    # silently losing CONTENT rejection for those rows forever.  (At
     # deployment both appends belong in one transactional Iceberg
     # commit — SCALE.md checkpoint row.)
     new_sig = new_sig.localCheckpoint(eager=True)
     n = new_sig.count()
-    band_table(new_sig, int(p["n_hashes"]), int(p["bands"])) \
-        .write.mode("append").parquet(f"{path}/bands")
+    kind.derive(new_sig, cfg).write.mode("append") \
+        .parquet(f"{path}/{kind.derived}")
     new_sig.write.mode("append").parquet(f"{path}/sigs")
     return n
 
@@ -817,25 +712,17 @@ def _admit_batch(new_docs: DataFrame, pairs: DataFrame,
     return survivors_in_batch.join(reject, id_col, "left_anti")
 
 
-def incremental_dedup(spark, path: str, new_docs: DataFrame,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      jaccard_threshold: float = 0.6,
-                      max_bucket: int = 200,
-                      out_sink=None,
-                      broadcast_threshold: int = 1_000_000) -> DataFrame:
-    """Admission control for a new batch: reject rows near-duplicating
-    the RESIDENT corpus, collapse duplicate clusters WITHIN the batch to
-    their min-id survivor (transitively, via connected components), and
-    append only the accepted rows' signatures to the store — "first seen
-    wins", the streaming-natural survivor policy.  Returns the accepted
-    rows of ``new_docs``.  Re-submitting an already-accepted batch —
-    same ids or fresh ids — rejects every row (its first copy now lives
-    in the store)."""
-    pairs, new_sig = incremental_minhash_pairs(
-        spark, path, new_docs, text_col, id_col, jaccard_threshold,
-        max_bucket, broadcast_threshold)
-    new_ids = new_sig.select(F.col("_id").alias(id_col))
+def _admit_to_store(spark, path: str, new_rows: DataFrame, id_col: str,
+                    pairs: DataFrame, new_sig: DataFrame, out_sink,
+                    append) -> DataFrame:
+    """Admission control shared by both stores: reject rows near-
+    duplicating the RESIDENT corpus, collapse duplicate clusters WITHIN
+    the batch to their min-id survivor (transitively, via connected
+    components), deliver the accepted rows to ``out_sink`` and only then
+    ``append`` their signatures — "first seen wins", the streaming-natural
+    survivor policy.  Returns the accepted rows of ``new_rows``."""
     from .similarity import _live_dir
+    new_ids = new_sig.select(F.col("_id").alias(id_col))
     stored_ids = spark.read.parquet(_live_dir(f"{path}/sigs")) \
         .select("_id")
     # localCheckpoint (NOT persist): the append below writes into
@@ -845,24 +732,152 @@ def incremental_dedup(spark, path: str, new_docs: DataFrame,
     # would see the just-accepted rows as resident and reject them.
     # Checkpointing truncates the plan to materialized blocks with no
     # path dependency, so the returned DataFrame is stable.
-    accepted = _admit_batch(new_docs, pairs, new_ids, stored_ids,
+    accepted = _admit_batch(new_rows, pairs.select("id_a", "id_b"),
+                            new_ids, stored_ids,
                             id_col).localCheckpoint(eager=True)
     if out_sink is not None:
         # deliver BEFORE the store append: a crash after the append but
         # before delivery would make the replay reject these rows as
-        # already-resident — accepted docs silently lost from the
+        # already-resident — accepted rows silently lost from the
         # output forever.  Sink-first + an idempotent per-batch sink
         # narrows the failure window to a mid-append crash, whose
-        # residue is duplicate store rows, not lost documents.
+        # residue is duplicate store rows, not lost rows.
         out_sink(accepted)
-    append_to_minhash_store(
-        spark, path,
-        new_sig.join(accepted.select(F.col(id_col).alias("_id")),
-                     "_id", "left_semi"),
-        check_id_type=False)   # already checked pre-sink in the pairs step
+    append(spark, path,
+           new_sig.join(accepted.select(F.col(id_col).alias("_id")),
+                        "_id", "left_semi"),
+           check_id_type=False)   # already checked pre-sink in the pairs step
     new_sig.unpersist()
     pairs.unpersist()
     return accepted
+
+
+def _minhash_cross(spark, spath: str, stored: DataFrame, new_rows: DataFrame,
+                   new_sig: DataFrame, cfg: dict,
+                   small_batch: bool) -> DataFrame:
+    """Minhash cross-pair check: a band match only nominates a candidate —
+    re-attach both signatures by id (the resident side through a join
+    keyed by the bounded candidate ids) and keep est_jaccard >=
+    ``jaccard_threshold``."""
+    cand = _bucket_join(stored, new_rows, _BAND_KEY,
+                        keep=F.col("id_a") != F.col("id_b"))
+    sa = spark.read.parquet(spath).select(F.col("_id").alias("id_a"),
+                                          F.col("sig").alias("sig_a"))
+    sb = new_sig.select(F.col("_id").alias("id_b"),
+                        F.col("sig").alias("sig_b"))
+    # signature re-attachment scales with the batch too
+    sb = F.broadcast(sb) if small_batch else sb.hint("merge")
+    return (cand.join(sa, "id_a").join(sb, "id_b")
+                .withColumn("est_jaccard", F.round(_est_jaccard(
+                    F.col("sig_a"), F.col("sig_b"), cfg["n_hashes"]), 6))
+                .where(F.col("est_jaccard") >= cfg["jaccard_threshold"])
+                .select("id_a", "id_b", "est_jaccard")
+                # crash-replay-duplicated sig rows in the store
+                # re-expand the deduped candidates here — dedupe
+                # AFTER attachment too (bounded: candidate-sized)
+                .dropDuplicates(["id_a", "id_b"]))
+
+
+def _phash_cross(spark, spath: str, stored: DataFrame, new_rows: DataFrame,
+                 new_sig: DataFrame, cfg: dict,
+                 small_batch: bool) -> DataFrame:
+    """Phash cross-pair check: the 64-bit hashes ride in the block rows,
+    so hamming is verified inside the probe join itself."""
+    return _bucket_join(stored, new_rows, _BLOCK_KEY, None, [_hamming()],
+                        (F.col("hamming") <= cfg["max_hamming"])
+                        & (F.col("id_a") != F.col("id_b")))
+
+
+# the pair functions are looked up at CALL time (not bound here), so a
+# caller that swaps a module attribute (tracing, tests) reaches the stores
+_MINHASH = _StoreKind(
+    "minhash", "bands", _BAND_KEY,
+    derive=lambda sig, c: band_table(sig, c["n_hashes"], c["bands"]),
+    rows_per_sig=lambda c: c["bands"],
+    cross=_minhash_cross,
+    intra=lambda sig, c: minhash_pairs_from_sig(
+        sig, c["n_hashes"], c["bands"], c["jaccard_threshold"],
+        c["max_bucket"]))
+
+_PHASH = _StoreKind(
+    "phash", "blocks", _BLOCK_KEY,
+    derive=lambda sig, c: pigeonhole_block_table(sig, c["max_hamming"]),
+    rows_per_sig=lambda c: c["max_hamming"] + 1,
+    cross=_phash_cross,
+    intra=lambda sig, c: simhash_pairs_from_sig(sig, c["max_hamming"],
+                                                c["max_bucket"]))
+
+
+def build_minhash_store(docs: DataFrame, path: str, text_col: str = "text",
+                        id_col: str = "doc_id", k: int = 5,
+                        n_hashes: int = 32, bands: int = 8) -> None:
+    """Persist the corpus's minhash state: ``sigs`` (_id, sig) and the
+    LSH ``bands`` table, plus a params sidecar.  One full pass at build;
+    every :func:`incremental_minhash_pairs` batch afterwards touches the
+    store only as (a) one SCAN of ``bands`` probed by a BROADCAST of the
+    new batch's bands (the resident rows never shuffle), and (b) a
+    semi-joined read of ``sigs`` bounded by the candidate count."""
+    # store boundary: enforce the canonical integral-or-string id class
+    _widened_id_type(docs.schema[id_col].dataType.simpleString(), id_col)
+    _build_store(minhash_signatures_np(docs, text_col, id_col, k, n_hashes),
+                 path, _MINHASH, {"k": k, "n_hashes": n_hashes, "bands": bands})
+
+
+def incremental_minhash_pairs(spark, path: str, new_docs: DataFrame,
+                              text_col: str = "text",
+                              id_col: str = "doc_id",
+                              jaccard_threshold: float = 0.6,
+                              max_bucket: int = 200,
+                              broadcast_threshold: int = 1_000_000):
+    """Near-dup pairs of a NEW document batch against the persisted
+    minhash store AND within the batch (see ``_store_pairs`` for the scale
+    shape and the ``broadcast_threshold`` backfill fallback).  Returns
+    ``(pairs, new_sig)``: pairs carry ``id_a``/``id_b``/``est_jaccard``
+    with id_a from the store side for cross pairs (canonical id_a < id_b
+    within the batch); ``new_sig`` is the batch signature table for
+    :func:`append_to_minhash_store`."""
+    return _store_pairs(
+        spark, path, _MINHASH,
+        lambda c: minhash_signatures_np(new_docs, text_col, id_col, c["k"],
+                                        c["n_hashes"]),
+        broadcast_threshold, jaccard_threshold=jaccard_threshold,
+        max_bucket=max_bucket)
+
+
+def append_to_minhash_store(spark, path: str, new_sig: DataFrame,
+                            check_id_type: bool = True) -> int:
+    """Append a batch's signatures + bands to the store (call with the
+    ACCEPTED subset after dedup so rejected near-dups never pollute the
+    store).  Returns the number of rows appended.  ``check_id_type=False``
+    skips the resident-schema probe when the caller (the incremental
+    paths) already ran it pre-sink — direct callers keep the chokepoint."""
+    return _append_to_store(spark, path, new_sig, _MINHASH, check_id_type)
+
+
+def incremental_dedup(spark, path: str, new_docs: DataFrame,
+                      text_col: str = "text", id_col: str = "doc_id",
+                      jaccard_threshold: float = 0.6,
+                      max_bucket: int = 200,
+                      out_sink=None,
+                      broadcast_threshold: int = 1_000_000) -> DataFrame:
+    """Admission control for a new document batch against the minhash
+    store (``_admit_to_store``): returns the accepted rows of
+    ``new_docs``, whose signatures are appended after ``out_sink`` (if
+    given) received them.  Re-submitting an already-accepted batch —
+    same ids or fresh ids — rejects every row (its first copy now lives
+    in the store)."""
+    pairs, new_sig = incremental_minhash_pairs(
+        spark, path, new_docs, text_col, id_col, jaccard_threshold,
+        max_bucket, broadcast_threshold)
+    return _admit_to_store(spark, path, new_docs, id_col, pairs, new_sig,
+                           out_sink, append_to_minhash_store)
+
+
+def _phash_sig(images: DataFrame, id_col: str, phash_col: str) -> DataFrame:
+    """(_id, simhash) with ``_id`` at the store-stable widened type."""
+    t = _widened_id_type(images.schema[id_col].dataType.simpleString(), id_col)
+    return images.select(F.col(id_col).cast(t).alias("_id"),
+                         F.col(phash_col).cast("long").alias("simhash"))
 
 
 def build_phash_store(images: DataFrame, path: str,
@@ -870,20 +885,9 @@ def build_phash_store(images: DataFrame, path: str,
                       max_hamming: int = 3) -> None:
     """Persist the IMAGE corpus's phash state — the multimodal twin of
     :func:`build_minhash_store`: ``sigs`` (_id, simhash) plus the
-    pigeonhole ``blocks`` table and a params sidecar.  Incremental
-    batches then touch the resident corpus only as a block scan probed
-    by a broadcast (no resident shuffle)."""
-    import pandas as pd
-    sig = images.select(_widened_id_col(images, id_col),
-                        F.col(phash_col).cast("long").alias("simhash"))
-    sig.write.mode("overwrite").parquet(f"{path}/sigs")
-    spark = images.sparkSession
-    stored = spark.read.parquet(f"{path}/sigs")
-    pigeonhole_block_table(stored, max_hamming) \
-        .write.mode("overwrite").parquet(f"{path}/blocks")
-    spark.createDataFrame(pd.DataFrame({
-        "max_hamming": [max_hamming],
-    })).write.mode("overwrite").parquet(f"{path}/params")
+    pigeonhole ``blocks`` table and a params sidecar."""
+    _build_store(_phash_sig(images, id_col, phash_col), path, _PHASH,
+                 {"max_hamming": max_hamming})
 
 
 def incremental_phash_pairs(spark, path: str, new_images: DataFrame,
@@ -892,82 +896,19 @@ def incremental_phash_pairs(spark, path: str, new_images: DataFrame,
                             max_bucket: int = 200,
                             broadcast_threshold: int = 1_000_000):
     """Near-dup pairs of a new image batch vs the persisted phash store
-    AND within the batch — same scale shape as
-    :func:`incremental_minhash_pairs` (batch blocks broadcast, resident
-    rows scanned, hamming verified JVM-side; ``broadcast_threshold``
-    guards the backfill case with the same sort-merge fallback).
+    AND within the batch — the same core as
+    :func:`incremental_minhash_pairs`, hamming verified JVM-side.
     Returns ``(pairs, new_sig)``."""
-    from .similarity import _live_dir
-    # read-only crashed-swap view — see incremental_minhash_pairs
-    bpath = _live_dir(f"{path}/blocks")
-    p = spark.read.parquet(f"{path}/params").collect()[0]
-    max_hamming = int(p["max_hamming"])
-
-    new_sig = new_images.select(
-        _widened_id_col(new_images, id_col),
-        F.col(phash_col).cast("long").alias("simhash")).persist()
-    # type-match vs the resident store BEFORE pair work / sink delivery
-    # (review r7, third pass — same rationale as the minhash path)
-    _check_store_id_type(spark, path, new_sig)
-    n_new = new_sig.count()
-    small_batch = n_new * (max_hamming + 1) <= broadcast_threshold
-    new_blocks = pigeonhole_block_table(new_sig, max_hamming)
-
-    stored_blocks = spark.read.parquet(bpath)
-    if max_bucket is not None:
-        # countDistinct — see incremental_minhash_pairs (replay-duplicated
-        # rows must not inflate a bucket over the cap)
-        hot = (stored_blocks.groupBy("block_id", "block_val")
-                            .agg(F.countDistinct("_id").alias("n"))
-                            .where(F.col("n") > max_bucket)
-                            .select("block_id", "block_val"))
-        stored_blocks = stored_blocks.join(F.broadcast(hot),
-                                           ["block_id", "block_val"],
-                                           "left_anti")
-
-    nb_side = (F.broadcast(new_blocks) if small_batch
-               else new_blocks.hint("merge"))
-    cross = (stored_blocks.alias("sb")
-             .join(nb_side.alias("nb"),
-                   (F.col("sb.block_id") == F.col("nb.block_id"))
-                   & (F.col("sb.block_val") == F.col("nb.block_val")))
-             .select(F.col("sb._id").alias("id_a"),
-                     F.col("nb._id").alias("id_b"),
-                     F.bit_count(F.col("sb.simhash")
-                                 .bitwiseXOR(F.col("nb.simhash")))
-                      .alias("hamming"))
-             .where((F.col("hamming") <= max_hamming)
-                    & (F.col("id_a") != F.col("id_b")))
-             .dropDuplicates(["id_a", "id_b"]))
-
-    intra = simhash_pairs_from_sig(new_sig, max_hamming, max_bucket)
-    pairs = cross.unionByName(intra)
-    if bpath != f"{path}/blocks":
-        # crashed-swap view — see incremental_minhash_pairs
-        pairs = pairs.localCheckpoint(eager=True)
-    else:
-        pairs = pairs.persist()
-        pairs.count()
-    intra.unpersist()
-    return pairs, new_sig
+    return _store_pairs(
+        spark, path, _PHASH,
+        lambda c: _phash_sig(new_images, id_col, phash_col),
+        broadcast_threshold, max_bucket=max_bucket)
 
 
 def append_to_phash_store(spark, path: str, new_sig: DataFrame,
                           check_id_type: bool = True) -> int:
-    """Image twin of :func:`append_to_minhash_store`: checkpoint once,
-    write blocks THEN sigs (same crash-ordering rationale)."""
-    from .similarity import _recover_swap
-    _recover_swap(f"{path}/sigs")
-    _recover_swap(f"{path}/blocks")
-    if check_id_type:
-        _check_store_id_type(spark, path, new_sig)
-    p = spark.read.parquet(f"{path}/params").collect()[0]
-    new_sig = new_sig.localCheckpoint(eager=True)
-    n = new_sig.count()
-    pigeonhole_block_table(new_sig, int(p["max_hamming"])) \
-        .write.mode("append").parquet(f"{path}/blocks")
-    new_sig.write.mode("append").parquet(f"{path}/sigs")
-    return n
+    """Image twin of :func:`append_to_minhash_store`."""
+    return _append_to_store(spark, path, new_sig, _PHASH, check_id_type)
 
 
 def incremental_phash_dedup(spark, path: str, new_images: DataFrame,
@@ -978,33 +919,12 @@ def incremental_phash_dedup(spark, path: str, new_images: DataFrame,
                             broadcast_threshold: int = 1_000_000
                             ) -> DataFrame:
     """Image admission control vs the persisted phash store — identical
-    semantics to :func:`incremental_dedup` (same ``_admit_batch`` logic:
-    resident-id replay rejection, direct near-dup rejection, WHOLE-
-    cluster transitive rejection, min-id in-batch survivor), with
-    accepted rows' phashes appended (first-seen-wins, durable)."""
+    semantics to :func:`incremental_dedup` (same ``_admit_to_store``)."""
     pairs, new_sig = incremental_phash_pairs(
         spark, path, new_images, id_col, phash_col, max_bucket,
         broadcast_threshold)
-    new_ids = new_sig.select(F.col("_id").alias(id_col))
-    from .similarity import _live_dir
-    stored_ids = spark.read.parquet(_live_dir(f"{path}/sigs")) \
-        .select("_id")
-    # localCheckpoint, not persist — see incremental_dedup (the sig
-    # append refreshes the path's file index and would invalidate a
-    # cached plan reading it, flipping the returned rows to rejected)
-    accepted = _admit_batch(new_images, pairs.select("id_a", "id_b"),
-                            new_ids, stored_ids,
-                            id_col).localCheckpoint(eager=True)
-    if out_sink is not None:
-        out_sink(accepted)   # sink-first — see incremental_dedup
-    append_to_phash_store(
-        spark, path,
-        new_sig.join(accepted.select(F.col(id_col).alias("_id")),
-                     "_id", "left_semi"),
-        check_id_type=False)   # already checked pre-sink in the pairs step
-    new_sig.unpersist()
-    pairs.unpersist()
-    return accepted
+    return _admit_to_store(spark, path, new_images, id_col, pairs, new_sig,
+                           out_sink, append_to_phash_store)
 
 
 def compact_store(spark, path: str, n_files: int = 8) -> dict:
@@ -1031,10 +951,9 @@ def compact_store(spark, path: str, n_files: int = 8) -> dict:
     SCALE.md checkpoint row."""
     from .similarity import _count_data_files, _recover_swap, _swap_dir
 
-    p = spark.read.parquet(f"{path}/params").collect()[0]
-    is_minhash = "n_hashes" in p.__fields__
-    dname = "bands" if is_minhash else "blocks"
-    spath, dpath = f"{path}/sigs", f"{path}/{dname}"
+    cfg = _store_params(spark, path)
+    kind = _MINHASH if "n_hashes" in cfg else _PHASH
+    spath, dpath = f"{path}/sigs", f"{path}/{kind.derived}"
     _recover_swap(spath)
     _recover_swap(dpath)
     files_before = _count_data_files(spath) + _count_data_files(dpath)
@@ -1045,15 +964,12 @@ def compact_store(spark, path: str, n_files: int = 8) -> dict:
 
     stmp, dtmp = spath + "__compact_tmp", dpath + "__compact_tmp"
     ded.write.mode("overwrite").parquet(stmp)
-    ded2 = spark.read.parquet(stmp)
-    derived = (band_table(ded2, int(p["n_hashes"]), int(p["bands"]))
-               if is_minhash
-               else pigeonhole_block_table(ded2, int(p["max_hamming"])))
-    derived.coalesce(max(1, n_files)).write.mode("overwrite").parquet(dtmp)
+    kind.derive(spark.read.parquet(stmp), cfg) \
+        .coalesce(max(1, n_files)).write.mode("overwrite").parquet(dtmp)
 
     for live, tmp in ((dpath, dtmp), (spath, stmp)):  # derived THEN sigs
         _swap_dir(live, tmp)
-    return {"store": "minhash" if is_minhash else "phash",
+    return {"store": kind.name,
             "files_before": files_before,
             "files_after": _count_data_files(spath) + _count_data_files(dpath),
             "rows_before": rows_before, "rows_after": rows_after,

@@ -8,9 +8,10 @@ design (north star):
    (driver-side, zones are small); points carry their center cell as a
    column.  The candidate set is a **broadcast hash join** on ``cell`` —
    no shuffle of the billion-row probe side at all.
-2. **exact refine** — a vectorized even-odd ray cast inside ``mapInPandas``
-   over Arrow batches, zone rings shipped once per executor via a Spark
-   broadcast variable (the ``last_band`` memo generalized).
+2. **exact refine** — an even-odd ray cast as a JVM higher-order
+   expression over each zone's edge array, shipped in a second tiny
+   broadcast (the ``last_band`` memo generalized); interior cells of the
+   labeled cover skip it.
 
 Skew: a hot zone fans out over MANY cells, so its candidates spread across
 all partitions of the probe side — no salting needed for the broadcast
@@ -28,21 +29,37 @@ from .. import dggs, geometry
 from ..dggs import DEFAULT_RES
 
 
-def zone_cover_df(spark, zones_pdf: pd.DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    """(cell, zone_id, full) covering pairs — driver-side cover of the small
-    build side (the reference's per-footprint spatial index role).
+def _zone_cover(zones_pdf: pd.DataFrame, res: int, adaptive_levels: int = 0):
+    """Driver-side cover of the small build side (the reference's
+    per-footprint spatial index role): ``(cover, rings, res_min)`` with
+    ``cover`` the (cell, zone_id, full) pandas rows, ``rings`` each zone's
+    antimeridian-split ring parts and ``res_min`` the coarsest cover level.
 
     ``full`` marks cells wholly inside the zone: candidates landing there
-    are accepted WITHOUT the exact refine (most of the interior at res 7),
-    so the Python ray cast only touches boundary cells."""
-    rows = []
+    are accepted WITHOUT the exact refine (most of the interior at res 7).
+    ``adaptive_levels > 0`` coalesces FULL cells up to that many parent
+    levels (``dggs.polygon_cover_adaptive``)."""
+    rows, rings, res_min = [], {}, res
     for _, z in zones_pdf.iterrows():
         ring = geometry.wkb_to_ring(z["geometry"])
-        cells, full = dggs.polygon_cover_labeled(ring, res)
+        # dateline-crossing zones become a list of in-range parts; the
+        # cover (split-aware itself) and the refine edge array handle parts
+        rings[int(z["zone_id"])] = geometry.split_ring_antimeridian(ring)
+        if adaptive_levels:
+            cells, full, rm = dggs.polygon_cover_adaptive(ring, res,
+                                                          adaptive_levels)
+            res_min = min(res_min, rm)
+        else:
+            cells, full = dggs.polygon_cover_labeled(ring, res)
         for c, f in zip(cells, full):
             rows.append((int(c), int(z["zone_id"]), bool(f)))
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cell", "zone_id", "full"]))
+    return pd.DataFrame(rows, columns=["cell", "zone_id", "full"]), rings, res_min
+
+
+def zone_cover_df(spark, zones_pdf: pd.DataFrame, res: int = DEFAULT_RES) -> DataFrame:
+    """(cell, zone_id, full) covering pairs of ``zones_pdf`` at ``res`` —
+    the broadcast cover ``pip_join`` builds (see ``_zone_cover``)."""
+    return spark.createDataFrame(_zone_cover(zones_pdf, res)[0])
 
 
 def _ring_edges_literal(rings) -> list:
@@ -75,7 +92,7 @@ def _pip_expr(edges_col, lon, lat):
 def pip_join(points: DataFrame, zones_pdf: pd.DataFrame,
              lon_col: str = "lon", lat_col: str = "lat",
              cell_col: str = "cell", res: int = DEFAULT_RES,
-             keep_zone_name: bool = True, engine: str = "sql",
+             keep_zone_name: bool = True,
              broadcast: bool = True, adaptive_levels: int = 0) -> DataFrame:
     """points ⋈ zones where the point lies inside the zone polygon.
 
@@ -84,12 +101,11 @@ def pip_join(points: DataFrame, zones_pdf: pd.DataFrame,
     ``zone_id`` (+ ``zone_name``).  A point inside multiple overlapping
     zones yields one row per zone (join semantics).
 
-    ``engine='sql'`` (default): the exact refine runs as a JVM higher-order
-    expression over the zone's broadcast edge array — zero Python in the
-    pipeline, whole-stage codegen end to end.  Interior (FULL) cells skip
-    even that via the labeled cover.
-    ``engine='pandas'``: Arrow-batch NumPy ray cast (the general path for
-    zone sets too large/complex to ship as expression literals).
+    The exact refine runs as a JVM higher-order expression over the
+    zone's broadcast edge array — zero Python in the pipeline, whole-stage
+    codegen end to end; it agrees bit-for-bit with the NumPy reference
+    ``geometry.points_in_ring``.  Interior (FULL) cells skip even that via
+    the labeled cover.
 
     ``broadcast=False``: for zone sets whose cover no longer fits a
     broadcast (10^6+ zones) — the cell match becomes a plain shuffle
@@ -103,23 +119,7 @@ def pip_join(points: DataFrame, zones_pdf: pd.DataFrame,
     (map-side explode, ``levels+1`` hash probes per point against a much
     smaller table).  Results identical — asserted in tests."""
     spark = points.sparkSession
-    cover_pdf_rows = []
-    rings = {}
-    res_min = res
-    for _, z in zones_pdf.iterrows():
-        ring = geometry.wkb_to_ring(z["geometry"])
-        # dateline-crossing zones become a list of in-range parts; the
-        # cover (split-aware itself) and both refine engines handle parts
-        rings[int(z["zone_id"])] = geometry.split_ring_antimeridian(ring)
-        if adaptive_levels:
-            cells, full, rm = dggs.polygon_cover_adaptive(ring, res,
-                                                          adaptive_levels)
-            res_min = min(res_min, rm)
-        else:
-            cells, full = dggs.polygon_cover_labeled(ring, res)
-        for c, f in zip(cells, full):
-            cover_pdf_rows.append((int(c), int(z["zone_id"]), bool(f)))
-    cover_pdf = pd.DataFrame(cover_pdf_rows, columns=["cell", "zone_id", "full"])
+    cover_pdf, rings, res_min = _zone_cover(zones_pdf, res, adaptive_levels)
 
     if adaptive_levels:
         from .. import functions as gf
@@ -133,56 +133,25 @@ def pip_join(points: DataFrame, zones_pdf: pd.DataFrame,
     else:
         join_key = cell_col
 
-    if engine == "sql":
-        # two tiny broadcasts: (cell -> zone, full) + (zone -> edge array);
-        # the refine is a JVM expression, evaluated ONLY for boundary cells
-        # via when(full) so interior candidates never touch the edges
-        edge_type = ("array<struct<x0:double,y0:double,x1:double,y1:double>>")
-        cover = spark.createDataFrame(
-            cover_pdf, schema="cell long, zone_id int, full boolean")
-        edges = spark.createDataFrame(
-            pd.DataFrame({"zone_id": list(rings),
-                          "edges": [_ring_edges_literal(r) for r in rings.values()]}),
-            schema=f"zone_id int, edges {edge_type}")
-        cov = F.broadcast(cover) if broadcast else cover
-        cand = (points.join(cov, points[join_key] == cover["cell"], "inner")
-                      .drop(cover["cell"])
-                      .join(F.broadcast(edges), "zone_id"))
-        if adaptive_levels:
-            cand = cand.drop("_jcell")
-        inside = F.when(F.col("full"), F.lit(True)).otherwise(
-            _pip_expr(F.col("edges"), F.col(lon_col), F.col(lat_col)))
-        refined = cand.where(inside).drop("full", "edges")
-    else:
-        cover = spark.createDataFrame(cover_pdf)
-        cov = F.broadcast(cover) if broadcast else cover
-        cand = points.join(cov, points[join_key] == cover["cell"], "inner") \
-                     .drop(cover["cell"])
-        if adaptive_levels:
-            cand = cand.drop("_jcell")
-        accepted = cand.where(F.col("full")).drop("full")
-        boundary = cand.where(~F.col("full")).drop("full")
-        bc = spark.sparkContext.broadcast(rings)
-        out_schema = boundary.schema
-
-        def refine(batches):
-            zr = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lons = pdf[lon_col].to_numpy(np.float64)
-                lats = pdf[lat_col].to_numpy(np.float64)
-                zids = pdf["zone_id"].to_numpy()
-                keep = np.zeros(len(pdf), dtype=bool)
-                for zid in np.unique(zids):
-                    sel = zids == zid
-                    hit = np.zeros(int(sel.sum()), dtype=bool)
-                    for part in zr[int(zid)]:
-                        hit |= geometry.points_in_ring(part, lons[sel], lats[sel])
-                    keep[sel] = hit
-                yield pdf[keep]
-
-        refined = accepted.unionByName(boundary.mapInPandas(refine, schema=out_schema))
+    # two tiny broadcasts: (cell -> zone, full) + (zone -> edge array);
+    # the refine is a JVM expression, evaluated ONLY for boundary cells
+    # via when(full) so interior candidates never touch the edges
+    edge_type = ("array<struct<x0:double,y0:double,x1:double,y1:double>>")
+    cover = spark.createDataFrame(
+        cover_pdf, schema="cell long, zone_id int, full boolean")
+    edges = spark.createDataFrame(
+        pd.DataFrame({"zone_id": list(rings),
+                      "edges": [_ring_edges_literal(r) for r in rings.values()]}),
+        schema=f"zone_id int, edges {edge_type}")
+    cov = F.broadcast(cover) if broadcast else cover
+    cand = (points.join(cov, points[join_key] == cover["cell"], "inner")
+                  .drop(cover["cell"])
+                  .join(F.broadcast(edges), "zone_id"))
+    if adaptive_levels:
+        cand = cand.drop("_jcell")
+    inside = F.when(F.col("full"), F.lit(True)).otherwise(
+        _pip_expr(F.col("edges"), F.col(lon_col), F.col(lat_col)))
+    refined = cand.where(inside).drop("full", "edges")
 
     if keep_zone_name:
         names = spark.createDataFrame(zones_pdf[["zone_id", "name"]]) \

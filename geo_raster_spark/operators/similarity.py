@@ -592,9 +592,13 @@ def compact_index(spark, path: str, id_col: str = "vec_id") -> dict:
     # (ADVICE r7): an id re-embedded under a new batch_id would otherwise
     # collapse to an arbitrary survivor and silently change query results
     # post-compaction.  Conflict check = one aggregation over a content
-    # hash of every non-batch column; maintenance-path cost only.
+    # hash of every non-batch column; maintenance-path cost only.  The
+    # hash input is the row's JSON (NULL fields are omitted by NAME):
+    # xxhash64 over the raw columns skips NULLs, so (NULL, "x") and
+    # ("x", NULL) would hash alike and a real conflict would pass.
     content = [c for c in cur.columns if c != "batch_id"]
-    bad = (cur.select(id_col, F.xxhash64(*content).alias("_h"))
+    h = F.xxhash64(F.to_json(F.struct(*content)))
+    bad = (cur.select(id_col, h.alias("_h"))
               .groupBy(id_col)
               .agg(F.countDistinct("_h").alias("_n"))
               .where(F.col("_n") > 1)

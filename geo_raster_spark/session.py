@@ -8,11 +8,13 @@ enabled for the pandas-UDF kernels, UTC session timezone for oracle parity.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 _WARM_FLAG = "_gsr_session_warmed"
+_log = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "geo-raster-spark", cores: int | None = None,
@@ -39,6 +41,11 @@ def get_spark(app_name: str = "geo-raster-spark", cores: int | None = None,
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
+    # ship the package zip (idempotent) independent of the warm-up: every
+    # pandas-UDF operator unpickles closures that import geo_raster_spark
+    # on the Python workers, also under GSR_NO_WARMUP=1
+    from .deploy import ensure_py_files
+    ensure_py_files(spark)
     sc = spark.sparkContext
     if not getattr(sc, _WARM_FLAG, False) \
             and os.environ.get("GSR_NO_WARMUP") != "1":
@@ -47,7 +54,7 @@ def get_spark(app_name: str = "geo-raster-spark", cores: int | None = None,
         except Exception as exc:  # best-effort: a warm-up failure (e.g. a
             # locked-down temp dir in a foreign harness) must never take
             # down session creation — queries still run, just cold.
-            print(f"geo_raster_spark: session warm-up skipped: {exc!r}")
+            _log.warning("geo_raster_spark: session warm-up skipped: %r", exc)
         setattr(sc, _WARM_FLAG, True)
     return spark
 
@@ -70,11 +77,6 @@ def _warm_session(spark: SparkSession, cores: int) -> None:
     import tempfile
 
     from pyspark.sql import functions as F
-
-    # 0. ship the package zip now (idempotent) — otherwise the first
-    # query pays the zip build + addPyFile RPC inside its timed region
-    from .deploy import ensure_py_files
-    ensure_py_files(spark)
 
     # 1. Python worker pool + Arrow serde: one tiny batch per core spawns
     # every worker once (spark.python.worker.reuse keeps them alive) and

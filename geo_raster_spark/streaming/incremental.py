@@ -33,8 +33,6 @@ def incremental_flagship(spark: SparkSession, images_path: str,
     fp = footprint.with_footprint(stream)
 
     def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
         joined = pip_join.pip_join(batch_df, zones_pdf, keep_zone_name=False)
         tiled = tile_assign.assign_tiles(joined)
         counts = (tiled.groupBy("zone_id", "tile_tag")
@@ -42,11 +40,21 @@ def incremental_flagship(spark: SparkSession, images_path: str,
                        .withColumn("batch_id", F.lit(batch_id)))
         counts.write.mode("append").parquet(out_path)
 
-    return (fp.writeStream
-              .foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint_path)
-              .trigger(availableNow=True)
-              .start())
+    return _available_now(fp, checkpoint_path, process_batch)
+
+
+def _available_now(stream, checkpoint_path: str, process):
+    """Start an AvailableNow foreachBatch query: ``process(batch_df,
+    batch_id)`` runs on every non-empty micro-batch."""
+    def run(batch_df, batch_id: int):
+        if not batch_df.isEmpty():
+            process(batch_df, batch_id)
+
+    return (stream.writeStream
+                  .foreachBatch(run)
+                  .option("checkpointLocation", checkpoint_path)
+                  .trigger(availableNow=True)
+                  .start())
 
 
 def windowed_event_counts(spark: SparkSession, events_path: str,
@@ -60,6 +68,23 @@ def windowed_event_counts(spark: SparkSession, events_path: str,
                   F.round(F.sum("value"), 4).alias("sum_value"))
              .select(F.col("w.start").alias("w_start"),
                      F.col("w.end").alias("w_end"), "event_type", "n", "sum_value"))
+
+
+def _batch_sink(out_path: str, batch_id: int):
+    """The admission doors' ``out_sink``: idempotent per-batch delivery,
+    executed BEFORE the store append (the admission's out_sink contract):
+    a replayed batch overwrites its own subdirectory instead of losing
+    rows to the already-resident rejection or duplicating them.  An EMPTY
+    accepted set never overwrites: a replay of a fully-committed batch
+    recomputes empty (its ids are now resident) and must not erase the
+    rows it delivered before the crash."""
+    def sink(accepted):
+        if accepted.limit(1).count() == 0:
+            return
+        (accepted.withColumn("batch_id", F.lit(batch_id))
+                 .write.mode("overwrite")
+                 .parquet(f"{out_path}/batch={batch_id}"))
+    return sink
 
 
 def streaming_dedup_admission(spark: SparkSession, docs_path: str,
@@ -86,36 +111,12 @@ def streaming_dedup_admission(spark: SparkSession, docs_path: str,
     # raising, so a mismatched default would silently dedup nothing
     schema = schema or f"{id_col} long, {text_col} string"
     stream = spark.readStream.schema(schema).parquet(docs_path)
-
-    def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
-
-        def sink(accepted):
-            # idempotent per-batch delivery, executed BEFORE the store
-            # append (incremental_dedup's out_sink contract): a replayed
-            # batch overwrites its own subdirectory instead of losing
-            # rows to the already-resident rejection or duplicating
-            # them.  An EMPTY accepted set never overwrites: a replay of
-            # a fully-committed batch recomputes empty (its ids are now
-            # resident) and must not erase the rows it delivered before
-            # the crash.
-            if accepted.limit(1).count() == 0:
-                return
-            (accepted.withColumn("batch_id", F.lit(batch_id))
-                     .write.mode("overwrite")
-                     .parquet(f"{out_path}/batch={batch_id}"))
-
-        dedup.incremental_dedup(
-            spark, store_path, batch_df, text_col=text_col,
-            id_col=id_col, jaccard_threshold=jaccard_threshold,
-            out_sink=sink)
-
-    return (stream.writeStream
-                  .foreachBatch(process_batch)
-                  .option("checkpointLocation", checkpoint_path)
-                  .trigger(availableNow=True)
-                  .start())
+    return _available_now(
+        stream, checkpoint_path,
+        lambda batch_df, batch_id: dedup.incremental_dedup(
+            spark, store_path, batch_df, text_col=text_col, id_col=id_col,
+            jaccard_threshold=jaccard_threshold,
+            out_sink=_batch_sink(out_path, batch_id)))
 
 
 def streaming_phash_admission(spark: SparkSession, images_path: str,
@@ -138,24 +139,9 @@ def streaming_phash_admission(spark: SparkSession, images_path: str,
 
     schema = schema or f"{id_col} long, {phash_col} long"
     stream = spark.readStream.schema(schema).parquet(images_path)
-
-    def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
-
-        def sink(accepted):
-            if accepted.limit(1).count() == 0:
-                return
-            (accepted.withColumn("batch_id", F.lit(batch_id))
-                     .write.mode("overwrite")
-                     .parquet(f"{out_path}/batch={batch_id}"))
-
-        dedup.incremental_phash_dedup(
+    return _available_now(
+        stream, checkpoint_path,
+        lambda batch_df, batch_id: dedup.incremental_phash_dedup(
             spark, store_path, batch_df, id_col=id_col,
-            phash_col=phash_col, max_bucket=max_bucket, out_sink=sink)
-
-    return (stream.writeStream
-                  .foreachBatch(process_batch)
-                  .option("checkpointLocation", checkpoint_path)
-                  .trigger(availableNow=True)
-                  .start())
+            phash_col=phash_col, max_bucket=max_bucket,
+            out_sink=_batch_sink(out_path, batch_id)))

@@ -185,10 +185,12 @@ def test_phash_dedup_corpus_end_to_end(spark):
     extra = []
     for _, r in pdf.iloc[:4].iterrows():
         extra.append({"image_id": r["image_id"] + "_c1",
-                      "phash": np.int64(np.uint64(r["phash"]) ^ np.uint64(3)),
+                      "phash": np.int64(np.int64(r["phash"]).view(np.uint64)
+                                        ^ np.uint64(3)),
                       "caption": r["caption"]})
         extra.append({"image_id": r["image_id"] + "_c2",
-                      "phash": np.int64(np.uint64(r["phash"]) ^ np.uint64(5)),
+                      "phash": np.int64(np.int64(r["phash"]).view(np.uint64)
+                                        ^ np.uint64(5)),
                       "caption": r["caption"]})
     allimgs = spark.createDataFrame(
         pd.concat([pdf, pd.DataFrame(extra)], ignore_index=True))
@@ -416,7 +418,8 @@ def test_incremental_phash_store_admission(spark, tmp_path):
     batch = spark.createDataFrame(pd.DataFrame([
         # 2-bit flip of a resident phash -> rejected
         {"image_id": "new_a",
-         "phash": np.int64(np.uint64(stored[0]["phash"]) ^ np.uint64(5))},
+         "phash": np.int64(np.int64(stored[0]["phash"]).view(np.uint64)
+                            ^ np.uint64(5))},
         # fresh phash -> accepted
         {"image_id": "new_b", "phash": fresh_ph},
         # in-batch 1-bit copy of the fresh one -> loses to min id (new_b)
@@ -489,7 +492,8 @@ def test_incremental_backfill_merge_fallback(spark, sf_dir, tmp_path):
         st = imgs.orderBy("image_id").limit(3).collect()
         pbatch = spark.createDataFrame(pd.DataFrame([
             {"image_id": f"bf_{i}",
-             "phash": np.int64(np.uint64(r["phash"]) ^ np.uint64(1))}
+             "phash": np.int64(np.int64(r["phash"]).view(np.uint64)
+                               ^ np.uint64(1))}
             for i, r in enumerate(st)]))
         pbig, _ps1 = dedup.incremental_phash_pairs(
             spark, ppath, pbatch, max_bucket=None, broadcast_threshold=0)
@@ -582,7 +586,8 @@ def test_compact_store_minhash_and_phash(spark, sf_dir, tmp_path):
     st = imgs.orderBy("image_id").limit(3).collect()
     pprobe = spark.createDataFrame(pd.DataFrame([
         {"image_id": f"cp_{i}",
-         "phash": np.int64(np.uint64(r["phash"]) ^ np.uint64(2))}
+         "phash": np.int64(np.int64(r["phash"]).view(np.uint64)
+                           ^ np.uint64(2))}
         for i, r in enumerate(st)]))
     pbefore, _p1 = dedup.incremental_phash_pairs(spark, ppath, pprobe,
                                                  max_bucket=None)
@@ -654,6 +659,33 @@ def test_cross_modal_dedup_planted_cluster(spark):
     assert got_comp == want
     cluster = {n for n, r in got_comp.items() if r == "doc:1"}
     assert cluster == {"doc:1", "img:A", "img:B", "img:C"}
+
+
+def test_cross_modal_pairs_failure_releases_sibling(spark, monkeypatch):
+    """If one of the two concurrent pair builders raises, the error
+    propagates and the pair table the OTHER builder persisted is
+    released, not leaked for the session lifetime."""
+    def boom(*_a, **_k):
+        raise RuntimeError("phash builder failed")
+
+    monkeypatch.setattr(dedup, "phash_pairs", boom)
+    text = ("the quick brown fox jumps over the lazy dog and then keeps "
+            "running through the mossy quiet forest")
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": ["1", "2"], "text": [text, text + " !"]}))
+    images = spark.createDataFrame(pd.DataFrame({
+        "image_id": ["A"], "caption": [text], "phash": [np.int64(7)]}))
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    # compared as id sets: the context cleaner may release OTHER tests'
+    # leftovers meanwhile, so only RDDs persisted by this call count
+    before = persisted()
+    with pytest.raises(RuntimeError, match="phash builder failed"):
+        cc.cross_modal_pairs(docs, images, jaccard_threshold=0.5)
+    assert persisted() - before == set()
 
 
 def test_store_swap_recovery_and_id_widening(spark, sf_dir, tmp_path):

@@ -80,3 +80,50 @@ def test_retired_j6_crossjoin_twin_matches_kring(spark):
     got = [(r["n_nationkey"], r["rank"], r["c_custkey"], r["dist2"])
            for r in twin]
     assert got == [tuple(w) for w in want]
+
+
+_BARE_CHILD = r"""
+import sys
+sys.path.insert(0, {repo!r})
+from geo_raster_spark.operators import dedup
+from geo_raster_spark.session import get_spark
+spark = get_spark(app_name="bare-session", cores=2)
+spark.sparkContext.setLogLevel("ERROR")
+docs = spark.createDataFrame([(1, "hello world"), (2, "spark shuffle")],
+                             "doc_id long, text string")
+print("RESULT", dedup.minhash_signatures_np(docs).count())
+"""
+
+
+def test_bare_get_spark_ships_package_without_warmup(tmp_path):
+    """A bare ``get_spark()`` must ship the package to the Python workers
+    itself: with the warm-up off and no PYTHONPATH, a pandas-UDF operator
+    would otherwise fail with ModuleNotFoundError on the workers."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(GSR_NO_WARMUP="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", _BARE_CHILD.format(repo=REPO)],
+        capture_output=True, text=True, timeout=600, cwd=str(tmp_path),
+        env=env)
+    assert "RESULT 2" in r.stdout, f"child failed:\n{r.stderr[-3000:]}"
+
+
+def test_warmup_failure_logs_to_stderr_not_stdout(spark, monkeypatch,
+                                                  capsys, caplog):
+    """A failed warm-up is reported through ``logging`` (stderr), never on
+    stdout — the driver harness reads stdout."""
+    import logging
+
+    from geo_raster_spark import session
+
+    def boom(*_a):
+        raise RuntimeError("forced warm-up failure")
+
+    monkeypatch.setattr(session, "_warm_session", boom)
+    monkeypatch.setattr(spark.sparkContext, session._WARM_FLAG, False)
+    monkeypatch.delenv("GSR_NO_WARMUP", raising=False)
+    capsys.readouterr()
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session.get_spark(app_name="geo-raster-spark-tests")
+    assert capsys.readouterr().out == ""
+    assert "forced warm-up failure" in caplog.text

@@ -156,6 +156,32 @@ def test_compact_index_rejects_reembedded_id(spark, sf_dir, tmp_path):
         similarity.compact_index(spark, path, id_col="vec_id")
 
 
+def test_compact_index_null_position_conflict(spark, sf_dir, tmp_path):
+    """Two deliveries of one id that differ only in WHICH of two string
+    columns is NULL are a content conflict: a raw xxhash64 over the
+    columns skips NULLs and hashed both rows alike."""
+    import pytest
+
+    from geo_raster_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    first = emb.orderBy("vec_id").limit(emb.count() // 2)
+    rest = (emb.join(first.select("vec_id"), "vec_id", "left_anti")
+               .orderBy("vec_id").limit(3))
+    x, null = F.lit("x"), F.lit(None).cast("string")
+    path = str(tmp_path / "ivf_nulls")
+    similarity.build_ivf_index(first.withColumn("c1", x).withColumn("c2", x),
+                               64, path, n_centroids=8)
+    similarity.append_to_index(
+        spark, path, rest.withColumn("c1", null).withColumn("c2", x),
+        kind="ivf", batch_id="day-001")
+    similarity.append_to_index(
+        spark, path, rest.withColumn("c1", x).withColumn("c2", null),
+        kind="ivf", batch_id="day-002")
+    with pytest.raises(ValueError, match="DIFFERING row content"):
+        similarity.compact_index(spark, path, id_col="vec_id")
+
+
 def test_boundcrs_scale_mismatch_names_the_heuristic():
     """ADVICE r7: when only the scale term of an abridged Helmert
     mismatches, the error must mention the unitless ratio/ppm heuristic

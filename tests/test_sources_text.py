@@ -352,22 +352,6 @@ def test_lsh_index_persisted_pruned_and_equal(spark, sf_dir, tmp_path):
     assert "bucket" in plan.split("PartitionFilters")[1].split("\n")[0]
 
 
-def test_minhash_cross_build_deterministic(spark, sf_dir):
-    """Regression: rebuilt plans must give identical signatures.
-
-    Guards the HOF lambda-arity footgun (a 2-arg `lambda s, i=i` binds the
-    array INDEX to i, poisoning salts with per-build variable names)."""
-    from geo_raster_spark.operators import dedup
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
-    runs = []
-    for _ in range(3):
-        p = (d.select("doc_id", dedup.minhash_signature(
-                dedup.shingles("text", 5), 16).alias("sig"))
-             .toPandas().sort_values("doc_id"))
-        runs.append([tuple(np.asarray(s).tolist()) for s in p["sig"]])
-    assert runs[0] == runs[1] == runs[2]
-
-
 def test_dbf_roundtrip(spark, tmp_path):
     """S10: dBase III attribute table write -> read (pandas + Spark paths),
     covering C/N(int)/N(dec)/L/D field types."""

@@ -51,7 +51,7 @@ def test_pip_join_exact_vs_oracle(spark, images_fp):
 def test_pip_join_shuffle_path_matches_broadcast(spark, images_fp):
     """pip_join(broadcast=False) — the 10^6+-zone variant where the cover no
     longer fits a broadcast — must return identical rows via the shuffle
-    equi-join, in both refine engines."""
+    equi-join."""
     zones = synth.zones_pandas(12, hot=True)
 
     def counts(df):
@@ -59,15 +59,14 @@ def test_pip_join_shuffle_path_matches_broadcast(spark, images_fp):
         return {int(z): int(n) for z, n in zip(pdf["zone_id"], pdf["count"])}
 
     want = counts(pip_join.pip_join(images_fp, zones, keep_zone_name=False))
-    for eng in ("sql", "pandas"):
-        got = counts(pip_join.pip_join(images_fp, zones, keep_zone_name=False,
-                                       engine=eng, broadcast=False))
-        assert got == want, eng
+    got = counts(pip_join.pip_join(images_fp, zones, keep_zone_name=False,
+                                   broadcast=False))
+    assert got == want
 
 
 def test_pip_join_adaptive_cover_matches_flat(spark, images_fp):
     """adaptive_levels shrinks the broadcast cover (multi-res FULL
-    coalescing) without changing a single result row, in both engines."""
+    coalescing) without changing a single result row."""
     zones = synth.zones_pandas(12, hot=True)
 
     def counts(df):
@@ -75,10 +74,9 @@ def test_pip_join_adaptive_cover_matches_flat(spark, images_fp):
         return {int(z): int(n) for z, n in zip(pdf["zone_id"], pdf["count"])}
 
     want = counts(pip_join.pip_join(images_fp, zones, keep_zone_name=False))
-    for eng in ("sql", "pandas"):
-        got = counts(pip_join.pip_join(images_fp, zones, keep_zone_name=False,
-                                       engine=eng, adaptive_levels=3))
-        assert got == want, eng
+    got = counts(pip_join.pip_join(images_fp, zones, keep_zone_name=False,
+                                   adaptive_levels=3))
+    assert got == want
 
 
 def test_tile_assign_matches_grid_enumeration(spark, images_fp):
@@ -214,7 +212,7 @@ def test_tile_assign_dateline_wrap(spark):
 
 def test_pip_join_dateline_zone(spark):
     """A zone polygon crossing ±180° matches points on BOTH sides of the
-    dateline, in both refine engines."""
+    dateline."""
     ring = geometry.bbox_to_ring((178.0, -5.0, 183.0, 5.0))  # crosses +180
     zones = pd.DataFrame([{"zone_id": 7, "name": "dateline",
                            "geometry": geometry.ring_to_wkb(ring)}])
@@ -225,10 +223,9 @@ def test_pip_join_dateline_zone(spark):
     df = spark.createDataFrame(pts)
     df = df.withColumn("cell", __import__("geo_raster_spark.functions", fromlist=["geocell"])
                        .geocell(F.col("lon"), F.col("lat")))
-    for eng in ("sql", "pandas"):
-        got = pip_join.pip_join(df, zones, engine=eng, keep_zone_name=False) \
-            .select("pt_id").toPandas()
-        assert sorted(got["pt_id"]) == [1, 2], eng
+    got = pip_join.pip_join(df, zones, keep_zone_name=False) \
+        .select("pt_id").toPandas()
+    assert sorted(got["pt_id"]) == [1, 2]
 
 
 def test_zonal_boundary_straddling_image(spark):
@@ -297,19 +294,23 @@ def test_zonal_stats_matches_kernel(spark):
     assert set(got.index) == set(agg.keys())
 
 
-def test_footprint_pandas_engine_agrees_with_sql(spark):
-    """The Arrow-UDF derivation must equal the column-math derivation
-    bit-for-bit (same SplitMix64, same cell packing)."""
-    imgs = flagship.footprint_input(spark, 500, 4)
-    a = footprint.with_footprint(imgs, engine="sql") \
-        .select("image_id", "lon", "lat", "minx", "maxy", "cell") \
+def test_footprint_sql_matches_numpy_reference_bitwise(spark):
+    """The column-math footprint must equal the NumPy references
+    (``synth.image_meta`` + ``dggs.latlng_to_cell``) bit-for-bit: same
+    SplitMix64, same extent arithmetic, same cell packing."""
+    n = 500
+    got = footprint.with_footprint(flagship.footprint_input(spark, n, 4)) \
         .orderBy("image_id").toPandas()
-    b = footprint.with_footprint(imgs, engine="pandas") \
-        .select("image_id", "lon", "lat", "minx", "maxy", "cell") \
-        .orderBy("image_id").toPandas()
-    assert (a["cell"].values == b["cell"].values).all()
-    np.testing.assert_array_equal(a["lon"].values, b["lon"].values)
-    np.testing.assert_array_equal(a["minx"].values, b["minx"].values)
+    m = synth.image_meta(np.arange(n))
+    for c in ("lon", "lat", "minx", "miny", "maxx", "maxy"):
+        np.testing.assert_array_equal(got[c].values, m[c], err_msg=c)
+    np.testing.assert_array_equal(got["cell"].values,
+                                  dggs.latlng_to_cell(m["lon"], m["lat"]))
+    cs = synth.CELL_SIZE
+    np.testing.assert_array_equal(
+        np.stack(got["gt"].values),
+        np.stack([m["minx"], np.full(n, cs), np.zeros(n), m["maxy"],
+                  np.zeros(n), np.full(n, -cs)], axis=1))
 
 
 def test_tile_cut_salted_equals_unsalted(spark):
